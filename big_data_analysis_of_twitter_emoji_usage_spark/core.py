@@ -53,6 +53,31 @@ def as_col(c: "Column | str") -> "Column":
     return F.col(c) if isinstance(c, str) else c
 
 
+def _host_ram_bytes() -> int | None:
+    """Host RAM (``MemTotal`` of ``/proc/meminfo``, read-only), or None
+    where that file does not exist or does not parse."""
+    try:
+        with open("/proc/meminfo", encoding="ascii") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024  # kB
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def _default_driver_memory(host_ram_bytes: int | None) -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    min(16g, host RAM / 2), in whole MiB. A heap sized past the host's
+    RAM does not fail at startup — it grows until the kernel kills the
+    process (or its neighbours); capped at half the RAM, an oversized
+    working set fails as a JVM OutOfMemoryError instead. Unknown RAM
+    keeps the 16g default."""
+    if host_ram_bytes is None or host_ram_bytes // 2 >= 16 << 30:
+        return "16g"
+    return f"{host_ram_bytes // 2 >> 20}m"
+
+
 def get_spark(
     app_name: str = "big_data_analysis_of_twitter_emoji_usage_spark",
     master: str | None = None,
@@ -81,6 +106,9 @@ def get_spark(
     honored per-QUERY at stream start, so callers can also flip the
     raw conf on a live session before ``.start()``. Any other non-None
     value raises — a typo'd provider must not silently run in-heap.
+
+    The driver heap is ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+    ``_default_driver_memory`` of the host's RAM.
     """
     if state_store is not None and state_store != "rocksdb":
         raise ValueError(
@@ -100,7 +128,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _default_driver_memory(_host_ram_bytes()),
+        )
         .config("spark.ui.enabled", "false")
         # Console progress bars interleave carriage-return spew with any
         # stdout the harness parses (bench.py emits one JSON line).
@@ -287,20 +319,6 @@ def stream_table_path(sf_dir: str, name: str) -> str:
     return table_path(sf_dir, name) + "*"
 
 
-# r13 A/B toggle for spread_stream (guide §2.5 input skew): True =
-# file-stream scans whose batch twin would be spread get a per-batch
-# round-robin repartition; False = the pre-r13 shape (map work serial
-# on the fixture's single-row-group files). Module-level so interleaved
-# A/B sessions can flip it without a code edit. NOTE the loaders
-# default to spread_scan=False — engagement is per call site, from the
-# measured table in OPTIMIZATION_r13.md: the exchange's fixed cost
-# (~0.2–0.3 s per availableNow drive at fixture scale) only pays where
-# the per-row map work is genuinely heavy (the 13-gram md5 decontam
-# probes: −30..−40%); the light projections/aggregations all measured
-# small losses.
-_SPREAD_STREAM_SCANS = True
-
-
 def spread_stream(stream, spark: SparkSession, sf_dir: str, name: str):
     """Streaming twin of ``spread``: round-robin repartition a
     file-stream source whose BATCH scan of the same files would arrive
@@ -322,9 +340,14 @@ def spread_stream(stream, spark: SparkSession, sf_dir: str, name: str):
     bounding the shuffled volume. The added per-batch Exchange is
     round-robin with sort-before-repartition (deterministic under task
     retry); results are partitioning-invariant for every consumer
-    (row-level projections, aggregations, watermarked joins)."""
-    if not _SPREAD_STREAM_SCANS:
-        return stream
+    (row-level projections, aggregations, watermarked joins).
+
+    The loaders default to ``spread_scan=False``: engagement is per
+    call site, from the measured table in OPTIMIZATION_r13.md — the
+    exchange's fixed cost (~0.2–0.3 s per availableNow drive at
+    fixture scale) only pays where the per-row map work is genuinely
+    heavy (the 13-gram md5 decontam probes: −30..−40%); the light
+    projections/aggregations all measured small losses."""
     sc = spark.sparkContext
     target = sc.defaultParallelism
     batch_probe = spark.read.parquet(table_path(sf_dir, name))

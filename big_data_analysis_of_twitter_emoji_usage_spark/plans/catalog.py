@@ -2147,34 +2147,34 @@ def stream_sessionize_stateful_demo(spark, sf):
         .filter(F.col("session_start") < F.col("_mx"))
         .drop("_mx")
     )
-    # r13 (guide §1.2: don't compute things twice): the r4 shape was
-    # count(closed exceptAll expected UNION expected exceptAll closed)
-    # — each exceptAll leg re-evaluates the OTHER side's subtree, so
-    # the batch-sessionize + last-session window above ran TWICE
-    # (phase-attributed at ~1.0 s of this query's ~2.3 s verify side).
-    # The symmetric multiset difference count is identically
-    # Σ_rows |count_closed(row) − count_expected(row)| — computed here
-    # with ONE pass per side: group each side by the full row, full-
-    # outer join the (row → count) tables, sum the absolute count
-    # deltas. Same n_mismatch for every input by definition of
-    # exceptAll (multiset semantics: max(l−r,0)+max(r−l,0) = |l−r|).
-    cols = closed.columns
-    lc = closed.groupBy(cols).agg(F.count(F.lit(1)).alias("_cl"))
-    rc = expected.groupBy(cols).agg(F.count(F.lit(1)).alias("_cr"))
-    delta = F.abs(
-        F.coalesce("_cl", F.lit(0)) - F.coalesce("_cr", F.lit(0))
-    )
-    mismatch_n = (
-        lc.join(rc, cols, "full_outer")
+    return closed.agg(
+        F.count(F.lit(1)).alias("n_closed_sessions")
+    ).crossJoin(F.broadcast(_symmetric_multiset_diff_count(closed, expected)))
+
+
+def _symmetric_multiset_diff_count(a, b):
+    """One row, ``n_mismatch`` = count(a exceptAll b ∪ b exceptAll a),
+    computed as Σ_rows |count_a(row) − count_b(row)| (multiset
+    semantics: max(l−r,0)+max(r−l,0) = |l−r|) in ONE pass per side:
+    a's rows tagged +1 and b's (projected to a's columns) tagged −1,
+    one union, one groupBy over the full row, the sum of |net|.
+    ``groupBy`` puts NULL-keyed rows in one group, exactly as
+    ``exceptAll`` matches them — an equi-join of per-side counts would
+    count identical NULL-keyed rows as mismatches. The exceptAll form
+    re-evaluates each side's subtree twice (r13: ~1.0 s of the
+    sessionize demo's ~2.3 s verify side)."""
+    cols = a.columns
+    return (
+        a.withColumn("_w", F.lit(1))
+        .unionByName(b.select(*cols).withColumn("_w", F.lit(-1)))
+        .groupBy(cols)
+        .agg(F.sum("_w").alias("_net"))
         .agg(
-            F.coalesce(F.sum(delta), F.lit(0))
+            F.coalesce(F.sum(F.abs("_net")), F.lit(0))
             .cast("long")
             .alias("n_mismatch")
         )
     )
-    return closed.agg(
-        F.count(F.lit(1)).alias("n_closed_sessions")
-    ).crossJoin(F.broadcast(mismatch_n))
 
 
 def stream_sessionize_native(spark, sf):
@@ -3104,15 +3104,12 @@ def stream_dedup_near_docs(spark, sf):
     store accumulates one partition per batch — the scratch dirs are
     fresh per call and reaped at process exit.
 
-    r10: ``store_buckets=32`` — the gate drives the band-partitioned
-    store layout (VERDICT r9 #3), a pure layout change whose keeper
-    set is pinned equal to the flat drive's by the banded
-    keeper-parity test; the oracle is unchanged because the results
-    are. r11: the layout went bucket-major (``_bkt=K/batch_id=N``,
-    dynamic partition overwrite, direct-path touched-subtree probes),
-    the payload is id-bucketed (``_pbkt``) so the Jaccard verify reads
-    only the candidates' buckets, and the store layout is
-    marker-enforced (``_layout.json``) — still a pure layout change.
+    ``store_buckets=32`` sizes the drive's one store layout: banded
+    and bucket-major (``_bkt=K/batch_id=N`` band rows, direct-path
+    touched-subtree probes), the payload id-bucketed (``_pbkt``) so
+    the Jaccard verify reads only the candidates' buckets, and
+    marker-enforced (``_layout.json``). The layout changes where rows
+    live, never the keeper set, so the oracle is the batch rule.
 
     r12: the maintenance loop is SELF-DRIVING (``maintain_every=2`` —
     roll + threshold-gated consolidation fire in-drive from
@@ -3251,8 +3248,8 @@ def stream_dedup_near_emb(spark, sf):
     "drop every vector with a smaller-id bucket-sharing partner at
     cosine ≥ threshold", which is the oracle (the sign-LSH pair CTE
     with a NOT-EXISTS keeper wrapper). Scratch dirs fresh per call,
-    reaped at process exit. r10: ``store_buckets=32`` — the banded
-    store layout, same contract as stream_dedup_near_docs. r12:
+    reaped at process exit. ``store_buckets=32`` sizes the banded
+    store, same contract as stream_dedup_near_docs. r12:
     in-drive maintenance (``maintain_every=2``) and the hot-bucket
     backstop in the plan (``max_bucket=64``, non-engaging — max
     (table, bucket) occupancy is 7 at sf0.01 / 16 at sf0.1, so the
@@ -3295,10 +3292,10 @@ def stream_knn_ivf(spark, sf):
     seed file included, is assigned to the fixed centroids and lands
     as posting rows), and the accumulated postings are probed with
     ``cosine_knn_ivf_probe_dir`` at the shipped 24/8×2 operating
-    point. r11: the drive lands LIST-MAJOR (``list_major=True`` —
-    ``_list=K/batch_id=N`` via dynamic partition overwrite, layout
-    marker-enforced) and the probe reads only the probed lists'
-    subtrees, the same write-once/probe-forever loop as
+    point. The drive maintains the list-major two-tier layout
+    (``_list=K/batch_id=N`` history, layout marker-enforced) and the
+    probe reads only the probed lists' subtrees, the same
+    write-once/probe-forever loop as
     ``knn_ivf_persisted`` but with the index MAINTAINED by the stream.
     The oracle re-derives the same thing statically: centroids =
     md5-rank over the first ceil(n/4) vec_ids, replicated assignment
@@ -3337,7 +3334,6 @@ def stream_knn_ivf(spark, sf):
         postings_dir=pdir,
         checkpoint_dir=_os.path.join(scratch, "ckpt"),
         replication=_KNN_IVF_REPL,
-        list_major=True,
         maintain_every=2,
         consolidate_min_batch_dirs=2,
     )
@@ -4957,7 +4953,7 @@ _GATE_FRONT = {
     # the sessionize demo's verify side replaces the double-exceptAll
     # with the grouped-count symmetric difference. Results verified
     # hash-identical for every one (oracle parity + driver contract).
-    # The 40 unchanged r12-attested rows rotate to the end of _PROVEN;
+    # The 42 unchanged r12-attested rows rotate to the end of _PROVEN;
     # their former slots drain the pre-declared r13 head (knn_lsh,
     # embedding_outliers, multimodal_decode, the 21 remaining r10 rows,
     # then the oldest r11 rows through the window boundary). ----

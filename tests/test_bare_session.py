@@ -95,3 +95,24 @@ def test_spread_probe_is_cached(spark, sf_dir):
     assert len(core._SCAN_PARTITIONS_CACHE) == 1
     core.load_table(spark, sf_dir, "documents")
     assert len(core._SCAN_PARTITIONS_CACHE) == 1  # hit, not a re-probe
+
+
+def test_default_driver_heap_is_half_host_ram_capped_at_16g():
+    """get_spark's default driver heap (SPARK_GRAFT_DRIVER_MEM unset) is
+    min(16g, host RAM / 2): a heap past the host's RAM fails as a
+    kernel kill instead of a JVM OutOfMemoryError. Pure sizing — no
+    JVM starts."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.core import (
+        _default_driver_memory,
+        _host_ram_bytes,
+    )
+
+    gib = 1 << 30
+    assert _default_driver_memory(15 * gib) == "7680m"
+    assert _default_driver_memory(32 * gib) == "16g"  # exactly at the cap
+    assert _default_driver_memory(256 * gib) == "16g"
+    assert _default_driver_memory(None) == "16g"  # RAM unknown
+    ram = _host_ram_bytes()
+    assert ram is None or ram > 0
+    mem = _default_driver_memory(ram)
+    assert mem == "16g" or int(mem[:-1]) << 20 <= ram // 2

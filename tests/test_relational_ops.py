@@ -208,33 +208,32 @@ def test_asof_tolerance_numeric_ts_columns(spark):
 
 
 def test_symmetric_multiset_diff_count_equals_exceptall(spark):
-    """r13 pin for the sessionize-demo verify restructure
+    """Pin for the sessionize-demo verify
     (plans/catalog.stream_sessionize_stateful_demo): for any two
-    multisets, count(A exceptAll B ∪ B exceptAll A) equals the
-    grouped-count full-outer-join Σ|cnt_A − cnt_B| that replaced it —
-    including duplicate rows and one-sided rows, and on empty inputs."""
-    from pyspark.sql import functions as F
+    multisets, count(A exceptAll B ∪ B exceptAll A) equals the tagged
+    union + groupBy Σ|net| that replaced it — including duplicate rows,
+    one-sided rows, empty inputs, and NULL-keyed rows (groupBy and
+    exceptAll both treat NULLs as equal; an equi-join would not)."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
+        _symmetric_multiset_diff_count,
+    )
 
     cases = [
         ([(1, "x"), (1, "x"), (2, "y"), (3, "z")],
-         [(1, "x"), (2, "y"), (2, "y"), (4, "w")]),
-        ([], [(1, "x")]),
-        ([(1, "x")], []),
-        ([], []),
-        ([(1, "x"), (1, "x")], [(1, "x"), (1, "x")]),
+         [(1, "x"), (2, "y"), (2, "y"), (4, "w")], 4),
+        ([], [(1, "x")], 1),
+        ([(1, "x")], [], 1),
+        ([], [], 0),
+        ([(1, "x"), (1, "x")], [(1, "x"), (1, "x")], 0),
+        # identical NULL-keyed rows on both sides: no mismatch
+        ([(None, "x"), (1, None), (None, None)],
+         [(None, "x"), (1, None), (None, None)], 0),
+        # a one-sided NULL row
+        ([(None, "x"), (1, "y")], [(1, "y")], 1),
     ]
-    for la, lb in cases:
+    for la, lb, want in cases:
         a = spark.createDataFrame(la, "k int, v string")
         b = spark.createDataFrame(lb, "k int, v string")
         old = a.exceptAll(b).unionAll(b.exceptAll(a)).count()
-        lc = a.groupBy("k", "v").agg(F.count(F.lit(1)).alias("_cl"))
-        rc = b.groupBy("k", "v").agg(F.count(F.lit(1)).alias("_cr"))
-        delta = F.abs(
-            F.coalesce("_cl", F.lit(0)) - F.coalesce("_cr", F.lit(0))
-        )
-        new = (
-            lc.join(rc, ["k", "v"], "full_outer")
-            .agg(F.coalesce(F.sum(delta), F.lit(0)).cast("long"))
-            .collect()[0][0]
-        )
-        assert new == old, (la, lb, new, old)
+        new = _symmetric_multiset_diff_count(a, b).collect()[0]["n_mismatch"]
+        assert new == old == want, (la, lb, new, old, want)

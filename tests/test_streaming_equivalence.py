@@ -246,188 +246,16 @@ def test_stream_transform_empty_drain_returns_transform_schema(
     assert got.count() == 0
 
 
-def test_stream_near_dedup_matches_batch_keepers(spark, sf_dir, tmp_path):
-    """Incremental streaming near-dedup == the batch pair-set keeper
-    rule under ordered arrival: stage the documents fixture as four
-    ascending-doc_id files with sequenced mtimes, drain one file per
-    trigger, and compare against ``near_dup_pairs``-derived keepers.
-    Also pins that the drive really was incremental (one store
-    partition per micro-batch) — a staging regression that collapses
-    everything into one batch would trivially pass the equivalence."""
-    from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
-    from big_data_analysis_of_twitter_emoji_usage_spark.operators.dedup import near_dup_pairs
-    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
-        _ordered_docs_stream_dir,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
-        stream_near_dedup_minhash,
-    )
-
-    src_dir = _ordered_docs_stream_dir(sf_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    store_dir = str(tmp_path / "store")
-    got = stream_near_dedup_minhash(
-        spark,
-        stream,
-        out_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        store_dir=store_dir,
-        threshold=0.2,
-    ).select("doc_id")
-
-    docs = load_table(spark, sf_dir, "documents")
-    dropped = (
-        near_dup_pairs(docs, threshold=0.2)
-        .select(F.col("id_b").alias("doc_id"))
-        .distinct()
-    )
-    want = docs.join(dropped, "doc_id", "left_anti").select("doc_id")
-    assert rows(got) == rows(want)
-    assert 0 < dropped.count()  # the equivalence is non-vacuous
-    batches = sorted(
-        d for d in os.listdir(store_dir) if d.startswith("batch_id=")
-    )
-    assert len(batches) == 4
-
-
-def test_stream_near_dedup_embedding_matches_batch_keepers(spark, sf_dir, tmp_path):
-    """Incremental streaming SEMANTIC dedup == the batch sign-LSH
-    keeper rule under ordered arrival (the embedding twin of the test
-    above): stage the embeddings fixture as four ascending-vec_id
-    files, drain one per trigger, compare against the
-    ``embedding_near_dup_pairs``-derived keepers at the same operating
-    point (no bucket guard — the streaming twin doesn't offer one).
-    Pins one store partition per micro-batch."""
-    from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
-    from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
-        embedding_near_dup_pairs,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
-        _ordered_embeddings_stream_dir,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
-        stream_near_dedup_embedding,
-    )
-
-    src_dir = _ordered_embeddings_stream_dir(sf_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    store_dir = str(tmp_path / "store")
-    got = stream_near_dedup_embedding(
-        spark,
-        stream,
-        out_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        store_dir=store_dir,
-        bits=8,
-        tables=2,
-        threshold=0.3,
-    ).select("vec_id")
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    dropped = (
-        embedding_near_dup_pairs(emb, threshold=0.3, bits=8, tables=2)
-        .select(F.col("id_b").alias("vec_id"))
-        .distinct()
-    )
-    want = emb.join(dropped, "vec_id", "left_anti").select("vec_id")
-    assert rows(got) == rows(want)
-    assert 0 < dropped.count()  # non-vacuous
-    batches = sorted(
-        d for d in os.listdir(store_dir) if d.startswith("batch_id=")
-    )
-    assert len(batches) == 4
-
-
-def test_stream_near_dedup_store_survives_compaction_between_drives(
-    spark, sf_dir, tmp_path
-):
-    """The docstring's maintenance loop, pinned: drive the first half
-    of an ordered replay, compact the signature store
-    (`compact_partitioned_parquet` — the store is batch_id-partitioned),
-    then resume the SAME checkpoint over the second half. The final
-    keeper set must still equal the batch rule over the full corpus —
-    i.e. compaction changes the store's file layout, never its content
-    or the resumed stream's reads."""
-    import shutil
-
-    from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
-    from big_data_analysis_of_twitter_emoji_usage_spark.operators.dedup import near_dup_pairs
-    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
-        _ordered_docs_stream_dir,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import (
-        compact_partitioned_parquet,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
-        stream_near_dedup_minhash,
-    )
-
-    staged = _ordered_docs_stream_dir(sf_dir)
-    parts = sorted(p for p in os.listdir(staged) if p.endswith(".parquet"))
-    assert len(parts) == 4
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    store_dir = str(tmp_path / "store")
-    kwargs = dict(
-        out_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        store_dir=store_dir,
-        threshold=0.2,
-    )
-
-    def drive():
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        return stream_near_dedup_minhash(spark, stream, **kwargs)
-
-    # first half arrives and is drained
-    for p in parts[:2]:
-        shutil.copy2(os.path.join(staged, p), os.path.join(src, p))
-    drive()
-    # maintenance window: compact the store between drives
-    stats = compact_partitioned_parquet(spark, store_dir, target_file_bytes=1 << 30)
-    assert stats["partitions"] == 2 and stats["files_after"] == 2
-    # second half arrives; the SAME checkpoint resumes (only new files)
-    for p in parts[2:]:
-        shutil.copy2(os.path.join(staged, p), os.path.join(src, p))
-    got = drive().select("doc_id")
-
-    docs = load_table(spark, sf_dir, "documents")
-    dropped = (
-        near_dup_pairs(docs, threshold=0.2)
-        .select(F.col("id_b").alias("doc_id"))
-        .distinct()
-    )
-    want = docs.join(dropped, "doc_id", "left_anti").select("doc_id")
-    assert rows(got) == rows(want)
-    batches = sorted(
-        d for d in os.listdir(store_dir) if d.startswith("batch_id=")
-    )
-    assert len(batches) == 4
-
-
 def test_stream_ivf_postings_survive_compaction_between_drives(
     spark, sf_dir, tmp_path
 ):
-    """The IVF analogue of the store-compaction pin above: drive half
-    the embedding replay into the posting store, compact it
-    (batch_id-partitioned leaves), resume the SAME checkpoint over the
-    rest — the probe over the final postings must equal the probe over
-    a batch-built index against the same seed centroids."""
+    """The IVF analogue of the banded dedup store's compaction pin:
+    drive half the embedding replay into the posting store, roll the
+    recent tail into the list-major history and compact it (the nested
+    _list=K/batch_id=N leaves are walked), resume the SAME checkpoint
+    over the rest — the probe over the drained postings (history ∪
+    recent) must equal the probe over a batch-built index against the
+    same seed centroids."""
     import shutil
 
     from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
@@ -443,6 +271,7 @@ def test_stream_ivf_postings_survive_compaction_between_drives(
     )
     from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import (
         compact_partitioned_parquet,
+        roll_recent_into_store,
     )
     from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
         stream_ivf_index_append,
@@ -477,8 +306,9 @@ def test_stream_ivf_postings_survive_compaction_between_drives(
     for p in parts[:2]:
         shutil.copy2(os.path.join(staged, p), os.path.join(src, p))
     drive()
+    assert roll_recent_into_store(spark, pdir, "_list")["batches_rolled"] == 2
     stats = compact_partitioned_parquet(spark, pdir, target_file_bytes=1 << 30)
-    assert stats["partitions"] == 2
+    assert stats["partitions"] > 2  # nested _list/batch_id leaves walked
     for p in parts[2:]:
         shutil.copy2(os.path.join(staged, p), os.path.join(src, p))
     postings = drive()
@@ -517,10 +347,11 @@ def test_stream_ivf_append_empty_source_returns_empty_postings(
     spark, tmp_path, sf_dir
 ):
     """ADVICE r9 #1: a first drive over an empty source (no trigger
-    ever fires, so no postings dir is written) must return an empty
-    postings frame with the (neighbor_id, cv, _list) schema instead of
-    raising PATH_NOT_FOUND — the same empty-drain contract every
-    sibling drain honors."""
+    ever fires, so neither tier of the list-major store holds data —
+    the postings dir has only its layout marker, and no recent tail
+    exists) must drain to an empty postings frame with the
+    (neighbor_id, cv, _cn, _list) schema instead of raising — the same
+    empty-drain contract every sibling drain honors."""
     from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
         ivf_assignments,
@@ -546,15 +377,20 @@ def test_stream_ivf_append_empty_source_returns_empty_postings(
     )
     assert postings.columns == ["neighbor_id", "cv", "_cn", "_list"]
     assert postings.count() == 0
+    post = str(tmp_path / "post")
+    assert [f for f in os.listdir(post) if not f.startswith(".")] == [
+        "_layout.json"
+    ]
+    assert not os.path.exists(post + "_recent")
 
 
 def test_stream_near_dedup_banded_store_matches_batch_keepers(
     spark, sf_dir, tmp_path
 ):
     """VERDICT r9 #3: the band-partitioned store layout
-    (store_buckets) must be a pure layout change — the banded drive's
-    keeper set equals the flat drive's (== the batch rule, pinned by
-    the sibling test), the bands dir is bucket-major
+    (store_buckets) must be a pure layout change — the drive's keeper
+    set equals the batch rule (near_dup_pairs keepers), the bands dir
+    is bucket-major
     (_bkt=K top level, one batch_id=N leaf per trigger inside, via
     dynamic partition overwrite), and the probe shape it enables is a
     direct-path read of the touched bucket subtrees only (pinned below
@@ -693,8 +529,9 @@ def test_stream_near_dedup_banded_probe_reads_touched_subtrees_only(
 def test_stream_near_dedup_embedding_banded_matches_batch_keepers(
     spark, sf_dir, tmp_path
 ):
-    """The embedding twin's banded layout: same keeper parity as the
-    flat drive at the same operating point."""
+    """The embedding twin's banded layout: the drained keeper set
+    equals the batch sign-LSH keeper rule (embedding_near_dup_pairs)
+    at the same operating point."""
     from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
         embedding_near_dup_pairs,
@@ -820,32 +657,47 @@ def test_stream_near_dedup_banded_store_survives_compaction_between_drives(
 
 
 def test_store_layout_marker_enforced(spark, sf_dir, tmp_path):
-    """ADVICE r10: the banded-store layout is a store-lifetime contract
-    — the drive must persist a layout marker on first use and REFUSE
-    (not silently mis-probe) a resume with a different bucket count, a
-    flat resume of a banded store, or an unmarked pre-existing store."""
+    """ADVICE r10: the store layout is a store-lifetime contract — each
+    drive persists the full layout marker on first use (layout
+    version, kind, bucket count, and the batch-id watermark) and
+    REFUSES (not silently mis-probes) a resume with a different bucket
+    count, a store whose marker records an unbanded layout (as older
+    engines wrote them), or an unmarked pre-existing store."""
     import json
 
+    from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
+    from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
+        ivf_assignments,
+        select_ivf_centroids,
+    )
     from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
         _ordered_docs_stream_dir,
+        _ordered_embeddings_stream_dir,
     )
     from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
         _STORE_LAYOUT_FILE,
+        stream_ivf_index_append,
+        stream_near_dedup_embedding,
         stream_near_dedup_minhash,
+        write_store_layout_marker,
     )
 
-    src_dir = _ordered_docs_stream_dir(sf_dir)
-    schema = spark.read.parquet(src_dir).schema
-
-    def drive(store_dir, ckpt, **kw):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
+    def stream(src_dir):
+        # the whole 4-file replay in ONE trigger: batch id 0
+        return (
+            spark.readStream.schema(spark.read.parquet(src_dir).schema)
+            .option("maxFilesPerTrigger", 4)
             .parquet(src_dir)
         )
+
+    def marker(store_dir):
+        with open(os.path.join(store_dir, _STORE_LAYOUT_FILE)) as fh:
+            return json.load(fh)
+
+    def minhash(store_dir, ckpt, **kw):
         return stream_near_dedup_minhash(
             spark,
-            stream,
+            stream(_ordered_docs_stream_dir(sf_dir)),
             out_dir=str(tmp_path / f"out{ckpt}"),
             checkpoint_dir=str(tmp_path / f"ckpt{ckpt}"),
             store_dir=store_dir,
@@ -853,24 +705,61 @@ def test_store_layout_marker_enforced(spark, sf_dir, tmp_path):
             **kw,
         )
 
+    emb_dir = _ordered_embeddings_stream_dir(sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    cdir = str(tmp_path / "cent")
+    ivf_assignments(emb, select_ivf_centroids(emb, "vec_id", 8))[0].write.parquet(
+        cdir
+    )
+
     store_dir = str(tmp_path / "store")
-    drive(store_dir, 0, store_buckets=16)
-    marker = os.path.join(store_dir, _STORE_LAYOUT_FILE)
-    with open(marker) as fh:
-        assert json.load(fh)["store_buckets"] == 16
+    minhash(store_dir, 0, store_buckets=16)
+    emb_store = str(tmp_path / "emb_store")
+    stream_near_dedup_embedding(
+        spark,
+        stream(emb_dir),
+        out_dir=str(tmp_path / "out_emb"),
+        checkpoint_dir=str(tmp_path / "ckpt_emb"),
+        store_dir=emb_store,
+        bits=8,
+        tables=2,
+        threshold=0.3,
+        store_buckets=16,
+    )
+    pdir = str(tmp_path / "post")
+    stream_ivf_index_append(
+        spark,
+        stream(emb_dir),
+        centroids_dir=cdir,
+        postings_dir=pdir,
+        checkpoint_dir=str(tmp_path / "ckpt_ivf"),
+    )
+    for got, kind, buckets in (
+        (marker(store_dir), "minhash", 16),
+        (marker(emb_store), "signbucket", 16),
+        (marker(pdir), "ivf_postings_list_major", None),
+    ):
+        # layout version and kind strings are what stores already on
+        # disk were marked with: changing them strands those stores
+        assert got == {
+            "layout_version": 2,
+            "kind": kind,
+            "store_buckets": buckets,
+            "max_batch_id": 0,
+        }
 
     # changed bucket count → refused
     with pytest.raises(ValueError, match="store-lifetime"):
-        drive(store_dir, 1, store_buckets=32)
-    # flat resume of a banded store → refused
+        minhash(store_dir, 1, store_buckets=32)
+    # a store marked unbanded (store_buckets None) → refused
+    unbanded = str(tmp_path / "unbanded")
+    write_store_layout_marker(spark, unbanded, "minhash", None)
     with pytest.raises(ValueError, match="store-lifetime"):
-        drive(store_dir, 2, store_buckets=None)
+        minhash(unbanded, 2, store_buckets=16)
     # unmarked pre-existing store → refused (cannot verify its layout)
-    os.remove(marker)
+    os.remove(os.path.join(store_dir, _STORE_LAYOUT_FILE))
     with pytest.raises(ValueError, match="no _layout.json"):
-        drive(store_dir, 3, store_buckets=16)
-
-
+        minhash(store_dir, 3, store_buckets=16)
 def test_stream_near_dedup_payload_scan_prunes_to_candidate_buckets(
     spark, sf_dir, tmp_path
 ):
@@ -996,13 +885,14 @@ def test_stream_near_dedup_banded_survives_empty_batch(spark, sf_dir, tmp_path):
 def test_stream_ivf_list_major_probeable_by_probe_dir(
     spark, sf_dir, tmp_path
 ):
-    """r11 list-major streamed index: stream_ivf_index_append with
-    list_major=True lands postings under _list=K/batch_id=N (dynamic
-    partition overwrite), so the accumulated streamed index is
-    directly probeable by cosine_knn_ivf_probe_dir — result equal to
+    """r11 list-major streamed index: stream_ivf_index_append lands
+    postings batch-major in the recent tail, rolled into
+    _list=K/batch_id=N history (dynamic partition overwrite), so the
+    accumulated streamed index is directly probeable by
+    cosine_knn_ivf_probe_dir before and after the roll — result equal to
     the in-memory probe over the drained postings, layout marker
-    enforced (a flat resume of a list-major postings store is
-    refused)."""
+    enforced (a store whose marker records the flat postings layout
+    older engines wrote is refused)."""
     from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
         cosine_knn_ivf_probe,
@@ -1015,6 +905,7 @@ def test_stream_ivf_list_major_probeable_by_probe_dir(
     )
     from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
         stream_ivf_index_append,
+        write_store_layout_marker,
     )
 
     staged = _ordered_embeddings_stream_dir(sf_dir)
@@ -1025,7 +916,7 @@ def test_stream_ivf_list_major_probeable_by_probe_dir(
     c.write.parquet(cdir)
     schema = spark.read.parquet(staged).schema
 
-    def drive(**kw):
+    def drive(postings_dir):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -1035,13 +926,12 @@ def test_stream_ivf_list_major_probeable_by_probe_dir(
             spark,
             stream,
             centroids_dir=cdir,
-            postings_dir=pdir,
+            postings_dir=postings_dir,
             checkpoint_dir=str(tmp_path / "ckpt"),
             replication=2,
-            **kw,
         )
 
-    postings = drive(list_major=True)
+    postings = drive(pdir)
     # two-tier layout: triggers land batch-major in the recent tail
     recents = [
         d
@@ -1087,9 +977,12 @@ def test_stream_ivf_list_major_probeable_by_probe_dir(
         ).collect()
     )
     assert got2 == want
-    # layout is a store-lifetime contract: flat resume refused
+    # layout is a store-lifetime contract: a flat postings store
+    # (marker kind "ivf_postings") is refused
+    flat = str(tmp_path / "flat_post")
+    write_store_layout_marker(spark, flat, "ivf_postings", None)
     with pytest.raises(ValueError, match="store-lifetime"):
-        drive(list_major=False)
+        drive(flat)
 
 
 def test_consolidate_bucket_history_between_drives(spark, sf_dir, tmp_path):
@@ -1291,7 +1184,6 @@ def test_stream_ivf_list_major_post_roll_resume_keeps_history(
             postings_dir=pdir,
             checkpoint_dir=str(tmp_path / "ckpt"),
             replication=2,
-            list_major=True,
         )
 
     n = drive().count()
@@ -2127,7 +2019,6 @@ def test_stream_ivf_maintenance_lands_drift_signal(spark, sf_dir, tmp_path):
         postings_dir=pdir,
         checkpoint_dir=str(tmp_path / "ckpt"),
         replication=2,
-        list_major=True,
         maintain_every=2,
         consolidate_min_batch_dirs=2,
     )
@@ -2182,79 +2073,34 @@ def test_read_committed_recent_equals_whole_tail_read(spark, tmp_path):
     assert _read_committed_recent(spark, recent, 0) is None
 
 
-def test_background_maintenance_parity_with_synchronous(
-    spark, sf_dir, tmp_path
-):
-    """r13: the background deferred-reap maintenance cycle
-    (_MaintenanceScheduler + defer_reap) must leave keeper set AND
-    final store layout identical to the synchronous r12 shape — same
-    drive, same parameters, toggle flipped."""
-    import shutil
-
-    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
-        _ordered_docs_stream_dir,
+def test_reap_deferred_resolves_each_path(spark, tmp_path):
+    """ADVICE r13: one maintenance cycle's reap list spans every store
+    root it maintained (band store and payload store), and those roots
+    need not share a filesystem or scheme — _reap_deferred resolves the
+    filesystem per path. The producers emit the caller's root form
+    (roll_recent_into_store like consolidate_bucket_history), not the
+    listing's qualified URIs."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import (
+        roll_recent_into_store,
     )
-    from big_data_analysis_of_twitter_emoji_usage_spark.streaming import jobs
     from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
-        stream_near_dedup_minhash,
+        _reap_deferred,
+        write_batch_idempotent,
     )
 
-    staged = _ordered_docs_stream_dir(sf_dir)
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for p in sorted(os.listdir(staged)):
-        if p.endswith(".parquet"):
-            shutil.copy2(os.path.join(staged, p), os.path.join(src, p))
-
-    def drive(tag):
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    a = str(tmp_path / "a" / "store")
+    b = str(tmp_path / "b" / "store")
+    for root in (a, b):
+        write_batch_idempotent(
+            spark.range(4).withColumn("_bkt", F.col("id") % 2), 0, root + "_recent"
         )
-        out = stream_near_dedup_minhash(
-            spark,
-            stream,
-            out_dir=str(tmp_path / tag / "out"),
-            checkpoint_dir=str(tmp_path / tag / "ckpt"),
-            store_dir=str(tmp_path / tag / "store"),
-            threshold=0.2,
-            store_buckets=16,
-            max_bucket=64,
-            maintain_every=2,
-            consolidate_min_batch_dirs=2,
-        )
-        keepers = rows(out.select("doc_id"))
-        store = str(tmp_path / tag / "store")
-        layout = {}
-        for root in (store, store + "_bands"):
-            for sub in ("", "_recent"):
-                d = root + sub
-                # directory STRUCTURE only (bucket/batch dirs) — part
-                # file names carry per-run UUIDs
-                layout[os.path.basename(d)] = sorted(
-                    os.path.join(b, s)
-                    for b in os.listdir(d)
-                    if not b.startswith(".")
-                    and os.path.isdir(os.path.join(d, b))
-                    for s in (
-                        [x for x in os.listdir(os.path.join(d, b))
-                         if x.startswith("batch_id=")] or [""]
-                    )
-                ) if os.path.isdir(d) else None
-        return keepers, layout
-
-    prev = jobs._OVERLAP_IN_DRIVE_MAINTENANCE
-    try:
-        jobs._OVERLAP_IN_DRIVE_MAINTENANCE = True
-        k_bg, l_bg = drive("bg")
-        jobs._OVERLAP_IN_DRIVE_MAINTENANCE = False
-        k_sync, l_sync = drive("sync")
-    finally:
-        jobs._OVERLAP_IN_DRIVE_MAINTENANCE = prev
-    assert k_bg == k_sync and len(k_bg) > 0
-    assert l_bg == l_sync  # same dirs rolled/merged/reaped at drain
+    reap = roll_recent_into_store(spark, a, "_bkt", defer_reap=True)
+    assert reap["deferred_reap"] == [a + "_recent/batch_id=0"]
+    b_dir = b + "_recent/batch_id=0"
+    _reap_deferred(spark, reap["deferred_reap"] + ["file://" + b_dir])
+    assert not os.path.exists(a + "_recent/batch_id=0")
+    assert not os.path.exists(b_dir)
+    assert os.path.isdir(a)  # the rolled history stays
 
 
 def test_spread_stream_fires_only_for_underspread_scans(spark, sf_dir):
@@ -2276,19 +2122,36 @@ def test_spread_stream_fires_only_for_underspread_scans(spark, sf_dir):
 
 
 def test_stream_decontam_docs_spread_result_parity(spark, sf_dir):
-    """The spread exchange must not change stream_decontam_docs'
-    drained result (partitioning-invariant per-row probe)."""
-    from big_data_analysis_of_twitter_emoji_usage_spark import core
-    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
-        QUERIES,
+    """The per-batch spread exchange must not change stream_decontam_docs'
+    drained result (partitioning-invariant per-row probe): the same
+    array-probe decontamination drained over the spread and the unspread
+    documents stream."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.core import (
+        load_table,
+        load_table_stream,
+    )
+    from big_data_analysis_of_twitter_emoji_usage_spark.operators.safety import (
+        decontaminate,
     )
 
-    prev = core._SPREAD_STREAM_SCANS
-    try:
-        core._SPREAD_STREAM_SCANS = True
-        a = rows(QUERIES["stream_decontam_docs"](spark, sf_dir))
-        core._SPREAD_STREAM_SCANS = False  # voids the per-site opt-in
-        b = rows(QUERIES["stream_decontam_docs"](spark, sf_dir))
-    finally:
-        core._SPREAD_STREAM_SCANS = prev
+    bench = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 35)
+        .select("text")
+    )
+
+    def drain(spread_scan):
+        stream = load_table_stream(
+            spark, sf_dir, "documents", ["doc_id", "text"], spread_scan=spread_scan
+        )
+        return rows(
+            run_stream_to_memory(
+                spark,
+                decontaminate(stream, bench, strategy="array"),
+                f"decontam_spread_{spread_scan}",
+                output_mode="append",
+            )
+        )
+
+    a, b = drain(True), drain(False)
     assert a == b and len(a) > 0
